@@ -18,15 +18,18 @@ one, so the engine adds the incremental layer the reference lacks:
 Scale shape: the diff is a single full-outer shuffle join on
 (path, key) — both sides hash-partition once; value comparison is a
 string equality on the canonical JSON.  Delta application is the same
-join shape.  Nothing is collected to the driver.
+join shape.  Nothing is collected to the driver; the per-status counts
+are observed on the delta write itself, and deltas are read back with
+their schema pinned (DELTA_SCHEMA), so no read infers one.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_snapshot,
@@ -35,6 +38,18 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
 
 #: diff row status values
 ADDED, REMOVED, CHANGED = "added", "removed", "changed"
+
+#: A stored delta: tree_diff's output.
+DELTA_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("key", StringType()),
+        StructField("status", StringType()),
+        StructField("old_value_json", StringType()),
+        StructField("new_value_json", StringType()),
+        StructField("depth", IntegerType()),
+    ]
+)
 
 
 def tree_diff(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -76,7 +91,7 @@ def write_delta(delta: DataFrame, out_dir: str, mode: str = "overwrite") -> None
 
 
 def read_delta(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "delta"))
+    return spark.read.schema(DELTA_SCHEMA).parquet(os.path.join(out_dir, "delta"))
 
 
 def apply_delta(base: DataFrame, delta: DataFrame) -> DataFrame:
@@ -101,18 +116,15 @@ def incremental_backup(
     out_dir: str,
 ) -> dict:
     """Diff the current tree against the previous snapshot and persist
-    only the delta.  Returns counts per status (one aggregation)."""
-    prev = read_snapshot(spark, prev_snapshot_dir)
-    delta = tree_diff(prev, current_tree)
+    only the delta.  Returns counts per status, observed on the write
+    (no read-back of the delta, no extra job)."""
+    statuses = (ADDED, REMOVED, CHANGED)
+    counts = Observation()
+    delta = tree_diff(read_snapshot(spark, prev_snapshot_dir), current_tree).observe(
+        counts, *[F.count_if(F.col("status") == s).alias(s) for s in statuses]
+    )
     write_delta(delta, out_dir)
-    counts = {
-        r["status"]: r["n"]
-        for r in read_delta(spark, out_dir)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    return {s: counts.get(s, 0) for s in (ADDED, REMOVED, CHANGED)}
+    return {s: counts.get[s] for s in statuses}
 
 
 def restore_to_version(

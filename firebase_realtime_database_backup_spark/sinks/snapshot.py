@@ -19,6 +19,12 @@ Partitioning: by `top` (first path segment).  Top-level subtrees are the
 reference's unit of descent and our unit of extract parallelism, so they
 are also the pruning key: restoring or querying one subtree reads one
 partition directory, nothing else.
+
+Every stored relation is read with its schema pinned (SNAPSHOT_SCHEMA,
+MANIFEST_SCHEMA): no read launches a schema-inference job or opens a
+file footer before the query runs, `top` stays a string whatever the
+key looks like, and an empty snapshot reads back as an empty relation
+instead of failing to infer a schema.
 """
 
 from __future__ import annotations
@@ -27,11 +33,32 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "tree"
+
+#: The stored tree: TREE_SCHEMA plus its partition column.
+SNAPSHOT_SCHEMA = StructType(
+    TREE_SCHEMA.fields + [StructField("top", StringType())]
+)
+
+#: One manifest row per parent path.
+MANIFEST_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("n_rows", LongType()),
+        StructField("part_files", ArrayType(StringType())),
+    ]
+)
 
 
 def _with_top(tree: DataFrame) -> DataFrame:
@@ -60,8 +87,9 @@ def write_snapshot(
         .partitionBy("top")
         .parquet(data_path)
     )
-    spark = tree.sparkSession
-    written = spark.read.parquet(data_path)
+    # The manifest is computed from the files just committed (their names
+    # only exist after the write), read back with the pinned schema.
+    written = _read_tree(tree.sparkSession, data_path)
     manifest = (
         written.withColumn("part_file", F.input_file_name())
         .groupBy("path")
@@ -73,15 +101,22 @@ def write_snapshot(
     manifest.write.mode(mode).json(os.path.join(out_dir, MANIFEST_DIR))
 
 
+def _read_tree(spark: SparkSession, data_path: str) -> DataFrame:
+    return spark.read.schema(SNAPSHOT_SCHEMA).parquet(data_path)
+
+
 def read_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read a snapshot back as the canonical tree relation (partition
-    column dropped; schema restored)."""
-    df = spark.read.parquet(os.path.join(out_dir, DATA_DIR))
+    column dropped)."""
+    df = _read_tree(spark, os.path.join(out_dir, DATA_DIR))
     return df.select([f.name for f in TREE_SCHEMA.fields])
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.json(os.path.join(out_dir, MANIFEST_DIR))
+    """The manifest as (path, n_rows, part_files); empty for an empty
+    snapshot."""
+    manifest_path = os.path.join(out_dir, MANIFEST_DIR)
+    return spark.read.schema(MANIFEST_SCHEMA).json(manifest_path)
 
 
 def archive_snapshot(out_dir: str, archive_path: str | None = None) -> str:

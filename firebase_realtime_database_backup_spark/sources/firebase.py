@@ -30,10 +30,12 @@ Architectural departures from the reference (Spark-first, 100 TB):
   over a DataFrame of subtree roots (`extract_distributed`) when the
   tree is wide enough to need a cluster's aggregate NIC bandwidth.  The
   reference is strictly sequential (SURVEY.md §3).
-- Pages stream straight into Arrow batches / tree rows — the bounded-
-  memory property the reference got from spill-to-disk chunk files
-  (src/BackupProcessor.php:130,202-223) falls out of Spark's iterator
-  model.
+- Pages stream into Arrow record batches (`tree.tree_batches`, at most
+  one page of rows per batch) as they arrive, so an extracted tree is
+  held as compact columnar buffers, never as per-row Python objects,
+  and reaches Spark as one Arrow table — the bounded-memory role the
+  reference gave its spill-to-disk chunk files
+  (src/BackupProcessor.php:130,202-223).
 """
 
 from __future__ import annotations
@@ -43,11 +45,15 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
+import pyarrow as pa
+
 from firebase_realtime_database_backup_spark.sources.tree import (
     TREE_SCHEMA,
     canonical_json,
     child_path,
     path_depth,
+    tree_batches,
+    tree_frame,
 )
 
 MIN_IPP = 2          # src/BackupProcessor.php:10
@@ -238,7 +244,7 @@ class FirebaseExtractor:
     # -- Spark materialization -------------------------------------------
     def to_dataframe(self, spark):
         """Materialize the scan as a tree DataFrame."""
-        return spark.createDataFrame(list(self.iter_rows()), TREE_SCHEMA)
+        return tree_frame(spark, tree_batches(self.iter_rows()))
 
 
 def extract(
@@ -262,17 +268,15 @@ def extract(
             client, max_ipp=max_ipp, root_start_ipp=root_start_ipp
         ).to_dataframe(spark)
 
-    def run(sub: str) -> list[tuple[str, str, str, int]]:
+    def run(sub: str) -> list[pa.RecordBatch]:
         ex = FirebaseExtractor(client, max_ipp=max_ipp, root_start_ipp=max_ipp)
-        return list(ex.iter_rows(child_path("/", sub)))
+        return list(tree_batches(ex.iter_rows(child_path("/", sub))))
 
-    rows: list[tuple[str, str, str, int]] = []
     with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
-        for chunk in pool.map(run, top):
-            rows.extend(chunk)
+        chunks = list(pool.map(run, top))
     # scalar top-level children emit their own (/, key, value) row inside
     # run(); dict children are carried page-grained by their subtree pass.
-    return spark.createDataFrame(rows, TREE_SCHEMA)
+    return tree_frame(spark, (batch for chunk in chunks for batch in chunk))
 
 
 def extract_distributed(
@@ -284,27 +288,22 @@ def extract_distributed(
 ):
     """Cluster-scale export: ship subtree roots to executors; each task
     runs its own AIMD extractor against its own client connection and
-    streams Arrow batches of tree rows.  This is the shape that uses a
-    1000-executor cluster's aggregate network bandwidth; the driver only
-    coordinates the subtree list (a few thousand strings)."""
-    import pandas as pd
-
+    streams Arrow batches of tree rows (`tree_batches`, as on the
+    driver).  This is the shape that uses a 1000-executor cluster's
+    aggregate network bandwidth; the driver only coordinates the subtree
+    list (a few thousand strings)."""
     paths_df = spark.createDataFrame(
         [(p,) for p in subtree_paths], "subtree string"
     ).repartition(max(1, min(len(subtree_paths), 64)))
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         client = client_factory()
-        for pdf in batches:
-            for sub in pdf["subtree"]:
+        for batch in batches:
+            for sub in batch.column("subtree").to_pylist():
                 ex = FirebaseExtractor(client, max_ipp=max_ipp, root_start_ipp=max_ipp)
-                rows = list(ex.iter_rows(sub))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["path", "key", "value_json", "depth"]
-                    )
+                yield from tree_batches(ex.iter_rows(sub))
 
-    return paths_df.mapInPandas(fetch, TREE_SCHEMA)
+    return paths_df.mapInArrow(fetch, TREE_SCHEMA)
 
 
 class FakeFirebase:

@@ -15,10 +15,14 @@ is unrolled iteratively per SURVEY.md §7.4).
 from __future__ import annotations
 
 import json
+from collections.abc import Iterable, Iterator
+from itertools import islice
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -40,6 +44,15 @@ TREE_SCHEMA = StructType(
     ]
 )
 
+#: TREE_SCHEMA in Arrow: the layout tree frames are built in.
+ARROW_TREE_SCHEMA = to_arrow_schema(TREE_SCHEMA)
+
+#: Rows per Arrow batch: one full page at the extractor's default page
+#: size (DEFAULT_MAX_IPP in sources/firebase.py).
+BATCH_ROWS = 1000
+
+TreeRow = tuple[str, str, str, int]
+
 
 def canonical_json(value: Any) -> str:
     """Deterministic JSON encoding (sorted keys, no whitespace)."""
@@ -56,11 +69,11 @@ def path_depth(path: str) -> int:
     return 0 if path in ("", "/") else path.rstrip("/").count("/")
 
 
-def rows_from_dict(d: dict, path: str = "/") -> list[tuple[str, str, str, int]]:
+def rows_from_dict(d: dict, path: str = "/") -> list[TreeRow]:
     """Fully-flattened tree rows for a nested dict: one row per node
     (maps included, encoded as their canonical JSON).  Test/reference
     fixture helper — the extractor produces page-grained rows instead."""
-    out: list[tuple[str, str, str, int]] = []
+    out: list[TreeRow] = []
     depth = path_depth(path) + 1
     for key in sorted(d):
         value = d[key]
@@ -70,9 +83,37 @@ def rows_from_dict(d: dict, path: str = "/") -> list[tuple[str, str, str, int]]:
     return out
 
 
+def tree_batches(rows: Iterable[TreeRow]) -> Iterator[pa.RecordBatch]:
+    """Pack tree rows into Arrow record batches of at most BATCH_ROWS
+    rows, buffers from the system allocator.  Only the batch being
+    filled is held as Python objects; everything before it is compact
+    columnar memory."""
+    pool = pa.system_memory_pool()
+    rows = iter(rows)
+    while chunk := list(islice(rows, BATCH_ROWS)):
+        path, key, value_json, depth = zip(*chunk)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(path, pa.string(), memory_pool=pool),
+                pa.array(key, pa.string(), memory_pool=pool),
+                pa.array(value_json, pa.string(), memory_pool=pool),
+                pa.array(depth, pa.int32(), memory_pool=pool),
+            ],
+            schema=ARROW_TREE_SCHEMA,
+        )
+
+
+def tree_frame(spark: SparkSession, batches: Iterable[pa.RecordBatch]) -> DataFrame:
+    """The one way a tree DataFrame is built from driver-side rows: an
+    Arrow table handed to the JVM as-is (no per-row pickling), with
+    TREE_SCHEMA exactly — non-nullable columns, int depth."""
+    table = pa.Table.from_batches(batches, schema=ARROW_TREE_SCHEMA)
+    return spark.createDataFrame(table, TREE_SCHEMA)
+
+
 def tree_from_dict(spark: SparkSession, d: dict) -> DataFrame:
     """Materialize a nested dict as a fully-flattened tree DataFrame."""
-    return spark.createDataFrame(rows_from_dict(d), TREE_SCHEMA)
+    return tree_frame(spark, tree_batches(rows_from_dict(d)))
 
 
 def leaves(tree: DataFrame) -> DataFrame:

@@ -4,6 +4,8 @@ confirmation guard)."""
 
 import json
 
+import pytest
+
 from firebase_realtime_database_backup_spark.api import (
     default_backup_name,
     do_backup,
@@ -33,6 +35,38 @@ def test_backup_restore_identity(spark, tmp_path):
     target = FakeFirebase({})
     do_restore(spark, out, lambda: target, driver_side=True)
     assert target.tree == TREE
+
+
+def test_empty_database_export(spark, tmp_path):
+    """Exporting an empty database gives an empty, readable snapshot:
+    no schema inference to fail, a typed manifest, a no-op restore, and
+    a full delta against it."""
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        expire_chain,
+        incremental_backup,
+    )
+    from firebase_realtime_database_backup_spark.sinks.snapshot import (
+        read_manifest,
+        read_snapshot,
+    )
+    from firebase_realtime_database_backup_spark.sources.firebase import extract
+
+    out = str(tmp_path / "empty")
+    do_backup(spark, FakeFirebase({}), out)
+    assert read_snapshot(spark, out).count() == 0
+    manifest = read_manifest(spark, out)
+    assert manifest.columns == ["path", "n_rows", "part_files"]
+    assert manifest.count() == 0
+    with pytest.raises(ValueError, match="empty/unreadable manifest"):
+        expire_chain(spark, out, str(tmp_path / "older"), [])
+
+    target = FakeFirebase({})
+    do_restore(spark, out, lambda: target, driver_side=True)
+    assert target.update_calls == [] and target.tree == {}
+
+    current = extract(spark, FakeFirebase(json.loads(json.dumps(TREE))))
+    counts = incremental_backup(spark, current, out, str(tmp_path / "delta"))
+    assert counts == {"added": current.count(), "removed": 0, "changed": 0}
 
 
 def test_cli_export_offline(spark, tmp_path, capsys):

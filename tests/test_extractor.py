@@ -19,7 +19,11 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     FirebaseTransportError,
     extract,
 )
-from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
+from firebase_realtime_database_backup_spark.sources.tree import (
+    TREE_SCHEMA,
+    child_path,
+    tree_to_dict,
+)
 
 
 def extract_dict(tree: dict, **kw) -> tuple[dict, FirebaseExtractor]:
@@ -169,9 +173,9 @@ def test_parallel_extract_to_dataframe(spark):
     assert tree_to_dict(df) == tree
 
 
-def test_extract_distributed_mapinpandas(spark):
+def test_extract_distributed_mapinarrow(spark):
     """Executor-side extraction: subtree roots shipped to tasks, each
-    task runs its own AIMD extractor through mapInPandas.  FakeFirebase
+    task runs its own AIMD extractor through mapInArrow.  FakeFirebase
     is picklable, standing in for a per-task HTTP client."""
     tree = {
         "a": {f"k{i}": {"v": i} for i in range(30)},
@@ -232,3 +236,44 @@ def test_parallel_extraction_beats_sequential():
     # 1.85x and false-failed the old 2x assertion; 1.5x still proves the
     # extraction genuinely parallelizes without flaking under load.
     assert par * 1.5 < seq, (seq, par)
+
+
+def _chain(depth: int) -> dict:
+    tree: dict = {"leaf": "end"}
+    for i in reversed(range(depth)):
+        tree = {f"c{i:02d}": tree}
+    return tree
+
+
+@pytest.mark.parametrize(
+    "tree,fake_kw",
+    [
+        ({}, {}),
+        ({"motd": "hi", "n": 7, "off": False, "pi": 3.25, "none": [None, 1]}, {}),
+        ({"héllo": 1, "用户": {"x": "中文值"}, "a b": {"'q\"": "é"}, "-Nzz": [1]}, {}),
+        (_chain(60), {"max_payload_bytes": 200}),
+        (
+            {"a": 1, "hot": {"big": {f"g{i:03d}": "x" * 50 for i in range(60)},
+                             "small": 2}},
+            {"max_payload_bytes": 600},
+        ),
+    ],
+    ids=["empty", "root-scalars", "unicode-keys", "chain-60", "go-deeper"],
+)
+def test_extract_frame_matches_iter_rows(spark, tree, fake_kw):
+    """extract() builds its frame from Arrow batches; schema and rows must
+    be exactly what the row-level extractor yields, per top-level
+    subtree (or for the root when the database is empty)."""
+    df = extract(spark, FakeFirebase(tree, **fake_kw), parallelism=3)
+    assert df.schema == TREE_SCHEMA
+
+    def rows_at(path: str) -> list:
+        return list(FirebaseExtractor(FakeFirebase(tree, **fake_kw)).iter_rows(path))
+
+    tops = sorted(tree)
+    want = [r for t in tops for r in rows_at(child_path("/", t))] if tops else rows_at("/")
+    assert [tuple(r) for r in df.collect()] == want
+    if "hot" in tree:  # the oversized node was descended into
+        assert ("/hot/big", "g000", '"' + "x" * 50 + '"', 3) in want
+    if "c00" in tree:  # the chain was descended most of the way down
+        assert max(depth for *_, depth in want) > 40

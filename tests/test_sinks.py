@@ -153,3 +153,41 @@ def test_archive_roundtrip(spark, tmp_path):
     inner = unarchive_snapshot(arch, str(tmp_path / "unpacked"))
     back = read_snapshot(spark, inner)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, tree.collect()))
+
+
+def test_spark_job_budget(spark, tmp_path):
+    """Each roundtrip call launches at most its budget of Spark jobs: no
+    schema-inference job on any read, no read-back of the delta, and the
+    extracted frame and a restore chain stay lazy."""
+    import uuid
+
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        incremental_backup,
+        restore_to_version,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(call):
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    full, delta = str(tmp_path / "full"), str(tmp_path / "delta")
+    src, n = jobs(lambda: extract(spark, FakeFirebase(TREE)))
+    assert n == 0
+    _, n = jobs(lambda: write_snapshot(src, full))
+    assert n <= 4
+    changed = json.loads(json.dumps(TREE))
+    changed["motd"] = "bye"
+    current = extract(spark, FakeFirebase(changed))
+    counts, n = jobs(lambda: incremental_backup(spark, current, full, delta))
+    assert n <= 3 and counts == {"added": 0, "removed": 0, "changed": 1}
+    tree, n = jobs(lambda: restore_to_version(spark, full, [delta]))
+    assert n == 0
+    assert sorted(map(tuple, tree.collect())) == sorted(map(tuple, current.collect()))
